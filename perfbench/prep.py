@@ -36,42 +36,17 @@ from workloads import (  # noqa: E402
 )
 
 
-class _AllWritten(Exception):
-    pass
-
-
 def data_dir(workload: Workload, seed: int) -> Path:
     return CACHE / "data" / f"sf{workload.sf:g}_s{seed}"
 
 
 def generate(workload: Workload, seed: int, out: Path) -> None:
-    """Write the workload's tables at its sf, drawn from ``seed``.
-
-    gen_sf draws every table from one sequential rng stream, so a table
-    subset is byte-identical to the same tables of a full run; generation
-    stops once the last requested table is written."""
+    """Write every table at the workload's sf, drawn from ``seed``."""
     import gen_sf
 
     gen_sf.SEED = seed
-    real_write = gen_sf._write
-    left = set(workload.tables or ())
-
-    def write_then_stop(out_: Path, name: str, table) -> None:  # noqa: ANN001
-        real_write(out_, name, table)
-        left.discard(name)
-        if not left:
-            raise _AllWritten
-
-    tables = set(workload.tables) if workload.tables else None
-    if tables:
-        gen_sf._write = write_then_stop
-    try:
-        with contextlib.redirect_stdout(sys.stderr):
-            gen_sf.gen(workload.sf, str(out), tables=tables)
-    except _AllWritten:
-        pass
-    finally:
-        gen_sf._write = real_write
+    with contextlib.redirect_stdout(sys.stderr):
+        gen_sf.gen(workload.sf, str(out))
 
 
 def run_oracles(queries: list[str], sf_dir: Path, out: Path) -> dict[str, float]:

@@ -37,8 +37,11 @@ def _stat(pid: int) -> tuple[int, str] | None:
     return int(fields[1]), fields[0]
 
 
-def descendants(root: int) -> list[int]:
-    """Live (non-zombie) descendants of ``root``."""
+def descendants(root: int, zombies: bool = False) -> list[int]:
+    """Descendants of ``root``; zombies only if ``zombies``.  A process
+    whose main thread has exited shows as a zombie while its other threads
+    (a JVM's) are still being torn down, so waiting for a tree to end must
+    count zombies until they are reaped."""
     children: dict[int, list[int]] = {}
     states: dict[int, str] = {}
     for name in os.listdir("/proc"):
@@ -52,7 +55,7 @@ def descendants(root: int) -> list[int]:
         for c in children.get(todo.pop(), []):
             out.append(c)
             todo.append(c)
-    return [p for p in out if states.get(p) != "Z"]
+    return [p for p in out if zombies or states.get(p) != "Z"]
 
 
 def describe(pid: int) -> str:
@@ -108,8 +111,9 @@ def kill_tree(root: int, also: int | None = None) -> None:
             os.killpg(also, signal.SIGKILL)
         except (ProcessLookupError, PermissionError):
             pass
-    for _ in range(50):
-        pids = descendants(root)
+    for _ in range(200):
+        reap()
+        pids = descendants(root, zombies=True)
         if not pids:
             break
         for pid in pids:
@@ -128,7 +132,7 @@ def wait_for_exit(root: int, grace_s: float) -> list[int]:
     deadline = time.monotonic() + grace_s
     while True:
         reap()
-        pids = descendants(root)
+        pids = descendants(root, zombies=True)
         if not pids or time.monotonic() >= deadline:
             return pids
         time.sleep(0.05)

@@ -7,14 +7,19 @@ Run from the repository root.  A run
 1. prepares the inputs (``prep.py``: parquet from ``--seed`` via
    ``tools/gen_sf.py`` plus the DuckDB oracle results, cached by sf and
    seed under ``perfbench/.cache``; not timed);
-2. starts ``worker.py`` in its own process group and samples the RSS of
-   the whole process tree (driver, JVM, Python workers) from /proc;
+2. starts ``worker.py --setup-only`` ``SETUP_SAMPLES - 1`` times, then
+   ``worker.py`` for the passes, each in its own process group
+   (``setup_s`` is the median of all ``SETUP_SAMPLES`` set-ups), and
+   samples the RSS of the whole process tree (driver, JVM, Python
+   workers) from /proc while the passes' worker runs;
 3. after the worker ends, waits briefly for its descendants to exit and
    fails the run if any survives (they are killed); on timeout, error or
    signal it kills the whole tree;
 4. prints one context line, then the result JSON as the last stdout line:
    the end-to-end metrics with ``--trace 0``, the per-layer metrics with
    ``--trace 1`` (event log, UDF profiler and streaming listener on).
+   Metric names and units are read from ``BENCHMARK.json``; a run whose
+   computed metrics differ from that list fails.
 
 The harness sets the run environment itself (``PYTHONPATH`` for Python
 workers, ``SPARK_GRAFT_CPUS`` = usable cores, one BLAS/OpenMP thread,
@@ -26,9 +31,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shlex
 import shutil
 import signal
+import statistics
 import subprocess
 import sys
 import time
@@ -41,7 +48,6 @@ sys.path.insert(0, str(HERE))
 
 import proctree  # noqa: E402
 from prep import data_dir  # noqa: E402
-from tracing import LAYER_UNITS  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
 #: whole-run wall limit (preparation included); a run must end within 180 s
@@ -51,11 +57,24 @@ EXIT_GRACE_S = 15.0
 #: engine files the benchmark needs in the checkout
 REQUIRED = ("etl_data_pipeline_spark/plans/registry.py", "tools/gen_sf.py", "tests/conftest.py")
 
-#: driver JVM heap, fixed (initial = max): with the engine's default 8g
-#: max heap, G1's heap growth made peak RSS wander by 15-50% between runs
+#: driver JVM max heap; the initial heap is left to the JVM, so the RSS
+#: follows the pages the engine touches
 DRIVER_MEM = "2g"
 
-E2E_UNITS = {"setup_s": "s", "cold_pass_s": "s", "pass_s": "s", "peak_rss_mb": "MB"}
+#: G1 grows the heap when collections take more than 1/(1 + ratio) of the
+#: time (ratio 12 by default).  Under a busy host that made the committed
+#: heap, and with it peak RSS, vary by up to 1.8x between runs of one
+#: workload; at 1 it grows only when collections take over half the
+#: time, which in practice is when live data needs the room
+GC_TIME_RATIO = 1
+
+#: set-ups per run (the passes' worker included); ``setup_s`` is their median
+SETUP_SAMPLES = 3
+#: figures each set-up reports; the run reports the median of each
+SETUP_KEYS = ("setup_s", "session.start_s", "plans.registry.load_s", "trace.setup_cover")
+
+_GC_PAUSE = re.compile(r"GC\(\d+\) Pause .* (\d+)([KMG])->(\d+)([KMG])\((\d+)([KMG])\) ([\d.]+)ms")
+_MB = {"K": 1 / 1024, "M": 1.0, "G": 1024.0}
 
 
 class RunFailed(Exception):
@@ -81,7 +100,8 @@ def run_env(tmp: Path, trace_dir: Path | None) -> dict[str, str]:
             "spark.sql.pyspark.udf.profiler": "perf",
         })
     submit = [a for k, v in conf.items() for a in ("--conf", f"{k}={v}")]
-    java_opts = f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    java_opts = (f"-XX:GCTimeRatio={GC_TIME_RATIO} -Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+                 f"-Xlog:gc:file={tmp / 'gc.log'}")
     submit += ["--driver-java-options", java_opts, "pyspark-shell"]
     env.update({
         "PYTHONPATH": os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])),
@@ -125,6 +145,24 @@ def supervise(cmd: list[str], env: dict, deadline: float, log) -> tuple[int, dic
         proctree.kill_tree(os.getpid())
         raise RunFailed(f"processes outlived the run: {names}")
     return proc.returncode, peak
+
+
+def gc_summary(gc_log: Path) -> dict[str, float]:
+    """From the driver JVM's ``-Xlog:gc`` lines (``GC(3) Pause Young ...
+    812M->120M(2048M) 4.1ms``): the peak of the heap in use right after a
+    collection, the peak committed heap, the pause count and their total."""
+    pauses = list(_GC_PAUSE.finditer(gc_log.read_text()))
+    return {
+        "heap_after_gc_peak_mb": max((int(m[3]) * _MB[m[4]] for m in pauses), default=0.0),
+        "heap_committed_peak_mb": max((int(m[5]) * _MB[m[6]] for m in pauses), default=0.0),
+        "pauses": len(pauses),
+        "pause_s": round(sum(float(m[7]) for m in pauses) / 1e3, 3),
+    }
+
+
+def metric_list(trace: bool) -> list[dict]:
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
+    return spec["per_layer" if trace else "end_to_end"]
 
 
 def link_inputs(data: Path, run_dir: Path) -> Path:
@@ -191,13 +229,38 @@ def main() -> int:
             cmd += ["--trace-dir", str(trace_dir)]
         if args.fail_mid_pass:
             cmd.append("--fail-mid-pass")
+        samples = []
         t_worker = time.monotonic()
         with open(log_path, "a") as log:
+            for _ in range(SETUP_SAMPLES - 1):
+                rc, _ = supervise(cmd + ["--setup-only", "--t0", repr(time.time())], env, deadline, log)
+                if rc != 0:
+                    raise RunFailed(f"set-up failed (exit {rc})")
+                samples.append(json.loads(out_path.read_text()))
+            # the passes' JVM writes the only GC and event logs read below
+            (tmp / "gc.log").unlink(missing_ok=True)
+            if trace_dir:
+                for f in (trace_dir / "eventlog").iterdir():
+                    f.unlink()
             rc, peak_rss = supervise(cmd + ["--t0", repr(time.time())], env, deadline, log)
         worker_s = time.monotonic() - t_worker
         if rc != 0:
             raise RunFailed(f"worker failed (exit {rc})")
         res = json.loads(out_path.read_text())
+        samples.append(res)
+        setup = {k: statistics.median(s[k] for s in samples) for k in SETUP_KEYS}
+        gc = gc_summary(tmp / "gc.log")
+        if args.trace:
+            computed = {**res["layers"], **{k: setup[k] for k in SETUP_KEYS[1:]},
+                        "trace.setup_s": setup["setup_s"],
+                        "jvm.heap_after_gc_peak_mb": gc["heap_after_gc_peak_mb"]}
+        else:
+            computed = {"setup_s": setup["setup_s"], "cold_pass_s": res["cold_pass_s"],
+                        "pass_s": res["pass_s"], "peak_rss_mb": sum(peak_rss.values())}
+        wanted = metric_list(bool(args.trace))
+        if {m["name"] for m in wanted} != set(computed):
+            raise RunFailed(f"computed metrics {sorted(computed)} differ from BENCHMARK.json's "
+                            f"{sorted(m['name'] for m in wanted)}")
         if trace_dir:
             traces = CACHE / "traces"
             traces.mkdir(exist_ok=True)
@@ -225,15 +288,12 @@ def main() -> int:
         "failures": res["failures"],
         "query_s": res["query_s"],
         "phase_s": {"prep": round(prep_s, 3), "worker": round(worker_s, 3), **res["phase_s"]},
+        "setup_s_samples": [round(s["setup_s"], 3) for s in samples],
         "peak_rss_mb_by_command": {k: round(v, 1) for k, v in peak_rss.items()},
+        "jvm_gc": gc,
         "loadavg_before": load_before, "loadavg_after": os.getloadavg(),
     }
-    if args.trace:
-        layers = res["layers"]
-        metrics = {k: {"value": layers[k], "unit": u} for k, u in LAYER_UNITS.items()}
-    else:
-        res["peak_rss_mb"] = sum(peak_rss.values())
-        metrics = {k: {"value": res[k], "unit": u} for k, u in E2E_UNITS.items()}
+    metrics = {m["name"]: {"value": computed[m["name"]], "unit": m["unit"]} for m in wanted}
     print("# perfbench " + json.dumps(context))
     print(json.dumps({"correct": res["failed"] == 0, "attempted": res["attempted"],
                       "failed": res["failed"], "metrics": metrics}))

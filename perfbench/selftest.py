@@ -70,12 +70,13 @@ def check_raises_mid_pass() -> str | None:
 
 
 def check_timeout() -> str | None:
-    return _no_result(*_finish(_start(["--timeout", "20"])))
+    # the two set-up samples take about 15 s: the cut falls in the cold pass
+    return _no_result(*_finish(_start(["--timeout", "30"])))
 
 
 def check_sigterm() -> str | None:
     proc = _start([])
-    time.sleep(15)  # inside set-up or the cold pass: JVM and workers are up
+    time.sleep(28)  # inside the cold pass: JVM and Python workers are up
     proc.send_signal(signal.SIGTERM)
     return _no_result(*_finish(proc))
 

@@ -187,8 +187,10 @@ def layer_metrics(spans: Spans, log: dict, warm: list[int], extra: dict) -> dict
     """Per-layer figures for the warm passes ``warm`` (median over passes).
 
     ``extra`` holds what the run measured itself, keyed by pass:
-    ``python_s``, ``rows``, ``batches``, ``batch_ms``; and scalars
-    ``persisted_rdds`` and ``cached_mb`` read after the last pass."""
+    ``python_s``, ``rows``, ``batches``, ``batch_ms``, and
+    ``persisted_rdds`` and ``cached_mb`` read after each pass (the cold
+    pass, 0, included).  Every figure is registered on each warm pass,
+    as 0 where nothing happened, so an idle layer still reports."""
     qspans = [s for s in spans.spans if s.name in ("build", "action")]
     by_group = {group_id(s): s for s in qspans}
     job_span = {j: _job_span(job, by_group, qspans) for j, job in log["jobs"].items()}
@@ -201,8 +203,7 @@ def layer_metrics(spans: Spans, log: dict, warm: list[int], extra: dict) -> dict
     for j, s in job_span.items():
         if s is not None:
             add(s.pass_no, "spark.jobs", 1)
-            if s.name == "build":
-                add(s.pass_no, "plans.build_jobs", 1)
+            add(s.pass_no, "plans.build_jobs", s.name == "build")
 
     def stage_pass(sid: int) -> int | None:
         s = job_span.get(log["stage_job"].get(sid))
@@ -220,8 +221,7 @@ def layer_metrics(spans: Spans, log: dict, warm: list[int], extra: dict) -> dict
         sw = m.get("Shuffle Write Metrics") or {}
         run_s = m.get("Executor Run Time", 0) / 1e3
         add(p, "spark.tasks", 1)
-        if (ev.get("Task End Reason") or {}).get("Reason") != "Success":
-            add(p, "spark.failed_tasks", 1)
+        add(p, "spark.failed_tasks", (ev.get("Task End Reason") or {}).get("Reason") != "Success")
         add(p, "spark.task_s", run_s)
         add(p, "spark.cpu_s", m.get("Executor CPU Time", 0) / 1e9)
         add(p, "spark.gc_s", m.get("JVM GC Time", 0) / 1e3)
@@ -231,14 +231,15 @@ def layer_metrics(spans: Spans, log: dict, warm: list[int], extra: dict) -> dict
             sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0))
         add(p, "spark.shuffle_fetch_wait_s", sr.get("Fetch Wait Time", 0) / 1e3)
         add(p, "sources.write_bytes", (m.get("Output Metrics") or {}).get("Bytes Written", 0))
-        if inp.get("Records Read", 0):
-            add(p, "catalog.scan_rows", inp["Records Read"])
-            add(p, "catalog.scan_task_s", run_s)
-        for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
-            if acc.get("ID") in log["py_rows_acc"]:
-                add(p, "operators.python_rows", float(acc.get("Update") or 0))
+        add(p, "catalog.scan_rows", inp.get("Records Read", 0))
+        add(p, "catalog.scan_task_s", run_s if inp.get("Records Read", 0) else 0.0)
+        add(p, "operators.python_rows", sum(
+            float(acc.get("Update") or 0) for acc in (ev.get("Task Info") or {}).get("Accumulables", [])
+            if acc.get("ID") in log["py_rows_acc"]))
 
     # task input bytes miss parquet's reads; the scan node's file size does not
+    for p in warm:
+        add(p, "catalog.scan_bytes", 0)
     for ex, acc, v in log["driver_acc"]:
         s = _span_at(log["sql_t0"].get(ex, -1.0), qspans)
         if acc in log["scan_bytes_acc"] and s is not None:
@@ -261,51 +262,15 @@ def layer_metrics(spans: Spans, log: dict, warm: list[int], extra: dict) -> dict
         add(p, "result.rows", extra["rows"].get(p, 0))
         add(p, "streaming.batches", extra["batches"].get(p, 0))
         add(p, "streaming.batch_s", extra["batch_ms"].get(p, 0.0) / 1e3)
+        add(p, "materialize.persisted_rdds", extra["persisted_rdds"][p])
+        add(p, "materialize.cached_mb", extra["cached_mb"][p])
 
-    names = sorted({k for d in per.values() for k in d} | set(PER_PASS))
+    names = {k for d in per.values() for k in d}
     out = {k: statistics.median(per[p].get(k, 0.0) for p in warm) for k in names}
-    out["materialize.persisted_rdds"] = extra["persisted_rdds"]
-    out["materialize.cached_mb"] = extra["cached_mb"]
+    # blocks left persisted by a pass pile up: growth from the end of the
+    # cold pass to the end of the last warm pass, per warm pass
+    out["materialize.persisted_rdds_growth"] = (
+        extra["persisted_rdds"][warm[-1]] - extra["persisted_rdds"][0]) / len(warm)
     return out
 
 
-#: per-pass metrics with their units
-PER_PASS = {
-    "plans.build_s": "s",
-    "plans.build_jobs": "count",
-    "catalog.scan_bytes": "bytes",
-    "catalog.scan_rows": "count",
-    "catalog.scan_task_s": "s",
-    "spark.jobs": "count",
-    "spark.stages": "count",
-    "spark.tasks": "count",
-    "spark.task_s": "s",
-    "spark.cpu_s": "s",
-    "spark.gc_s": "s",
-    "spark.shuffle_write_bytes": "bytes",
-    "spark.shuffle_read_bytes": "bytes",
-    "spark.shuffle_fetch_wait_s": "s",
-    "spark.spill_bytes": "bytes",
-    "spark.failed_tasks": "count",
-    "operators.python_s": "s",
-    "operators.python_rows": "count",
-    "sources.write_bytes": "bytes",
-    "streaming.batches": "count",
-    "streaming.batch_s": "s",
-    "result.rows": "count",
-    "result.collect_s": "s",
-}
-
-
-#: every per-layer metric the traced run reports, with its unit
-LAYER_UNITS = {
-    **PER_PASS,
-    "session.start_s": "s",
-    "plans.registry.load_s": "s",
-    "materialize.persisted_rdds": "count",
-    "materialize.cached_mb": "MB",
-    "trace.setup_s": "s",
-    "trace.setup_cover": "ratio",
-    "trace.pass_s": "s",
-    "trace.pass_cover": "ratio",
-}

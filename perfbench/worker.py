@@ -5,6 +5,8 @@ Drives the engine only through its public entry points
 sf_dir)`` and the ``toPandas()`` action), one query after another:
 
 1. set-up: load the registry and start the session (``setup_s``);
+   with ``--setup-only`` the worker stops here, so that ``run.py`` can
+   take several set-up samples per run;
 2. a cold pass in the fresh session (``cold_pass_s``), whose results are
    compared with the DuckDB oracle frames made by ``prep.py``;
 3. warm passes until ``--seconds`` have passed since the first of them
@@ -115,6 +117,7 @@ def main() -> None:
     ap.add_argument("--t0", type=float, required=True, help="epoch time of spawn")
     ap.add_argument("--out", required=True)
     ap.add_argument("--trace-dir")
+    ap.add_argument("--setup-only", action="store_true")
     ap.add_argument("--fail-mid-pass", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
     wl = WORKLOADS[args.workload]
@@ -130,7 +133,16 @@ def main() -> None:
             from etl_data_pipeline_spark.session import get_spark
 
             spark = get_spark(app_name=f"perfbench-{wl.name}")
-    out: dict = {"setup_s": spans.duration(setup)}
+    parts = {s.name: spans.duration(s) for s in spans.spans if s.parent == setup.id}
+    out: dict = {"setup_s": spans.duration(setup),
+                 "session.start_s": parts["session.start"],
+                 "plans.registry.load_s": parts["plans.registry.load"],
+                 # how much of the set-up wall its two child spans account for
+                 "trace.setup_cover": 1 - spans.self_time(setup) / spans.duration(setup)}
+    if args.setup_only:
+        stop_spark(spark)
+        Path(args.out).write_text(json.dumps(out))
+        return
     try:
         spark.sparkContext.setLogLevel("ERROR")
         stream = StreamingProgress()
@@ -140,7 +152,7 @@ def main() -> None:
                 group_id(s), f"{s.name} {s.query}")
         checker = Checker(Path(args.oracle_dir))
         extra = {"python_s": {}, "rows": {}, "batches": stream.batches,
-                 "batch_ms": stream.batch_ms}
+                 "batch_ms": stream.batch_ms, "persisted_rdds": {}, "cached_mb": {}}
         attempted = failed = 0
         t_warm = None
         pass_no = 0
@@ -168,12 +180,12 @@ def main() -> None:
             extra["rows"][pass_no] = sum(len(r) for _, r in results if not isinstance(r, BaseException))
             if trace:
                 extra["python_s"][pass_no] = profiled_python_s(spark, Path(args.trace_dir) / f"profile{pass_no}")
+                extra["persisted_rdds"][pass_no], extra["cached_mb"][pass_no] = storage_counters(spark)
             pass_no += 1
             if t_warm is None:
                 t_warm = time.monotonic()
             elif pass_no > MIN_WARM_PASSES and time.monotonic() - t_warm >= args.seconds:
                 break
-        extra["persisted_rdds"], extra["cached_mb"] = storage_counters(spark)
     finally:
         t_stop = time.monotonic()
         stop_spark(spark)
@@ -195,7 +207,7 @@ def main() -> None:
         "phase_s": {k: round(out.pop(k), 3) for k in ("check_s", "stop_s")},
     })
     if trace:
-        out["layers"] = traced_layers(spans, args.trace_dir, extra, setup)
+        out["layers"] = traced_layers(spans, args.trace_dir, extra)
         spans.dump(Path(args.trace_dir) / "spans.json")
     Path(args.out).write_text(json.dumps(out))
 
@@ -221,18 +233,14 @@ def profiled_python_s(spark, dump_dir: Path) -> float:  # noqa: ANN001
     return sum(pstats.Stats(str(p)).total_tt for p in dump_dir.glob("*.pstats"))
 
 
-def traced_layers(spans: Spans, trace_dir: str, extra: dict, setup) -> dict:  # noqa: ANN001
+def traced_layers(spans: Spans, trace_dir: str, extra: dict) -> dict:
+    """The per-pass layer figures, and how much of the pass wall the
+    build and action spans account for."""
     (log_file,) = (p for p in Path(trace_dir, "eventlog").rglob("*") if p.is_file())
     log = read_event_log(log_file)
     passes = spans.passes()
     warm = [s.pass_no for s in passes[1:]]
     layers = layer_metrics(spans, log, warm, extra)
-    by_name = {s.name: s for s in spans.spans if s.parent == setup.id}
-    layers["session.start_s"] = spans.duration(by_name["session.start"])
-    layers["plans.registry.load_s"] = spans.duration(by_name["plans.registry.load"])
-    # how much of each wall the child spans account for
-    layers["trace.setup_s"] = spans.duration(setup)
-    layers["trace.setup_cover"] = 1 - spans.self_time(setup) / spans.duration(setup)
     warm_spans = passes[1:]
     layers["trace.pass_s"] = statistics.median(spans.duration(s) for s in warm_spans)
     layers["trace.pass_cover"] = statistics.median(
